@@ -994,9 +994,15 @@ class Catalog:
         timestamp_as_of: int | None = None,
     ) -> Snapshot:
         log = self._log(table, namespace)
-        if log.latest_version() is None:
+        # One listing of the log resolves the snapshot: existence, the
+        # checkpoint to start from, the commits after it, and whether a
+        # lazy checkpoint is due.
+        versions, cps = log.listing()
+        if not versions:
             raise TableNotFoundError(f"{namespace}.{table}")
-        snap = Snapshot.of(log, version_as_of, timestamp_as_of)
+        snap = Snapshot.of(
+            log, version_as_of, timestamp_as_of, listing=(versions, cps)
+        )
         if version_as_of is None and timestamp_as_of is None:
             # Lazy checkpointing: whoever resolves a snapshot far enough
             # past the last checkpoint persists a new one, keeping later
@@ -1006,7 +1012,6 @@ class Catalog:
                     "checkpoint.interval", 20
                 )
             )
-            cps = log.checkpoints()
             last_cp = cps[-1] if cps else 0
             # Never checkpoint a provisional snapshot: an in-flight
             # multi-table txn's skipped commit may still land, and a
@@ -1640,10 +1645,15 @@ class Catalog:
         COMMIT as the data (atomic watermark channel — e.g. incremental
         materialization records its source high-water version with the
         rows it derived, so a crash can never split the two)."""
-        exists = self.table_exists(table, namespace)
-        if mode == TableWriteMode.CREATE and exists:
+        # The first attempt's snapshot doubles as the existence check
+        # (one log listing instead of two).
+        try:
+            snap = self.snapshot(table, namespace)
+        except TableNotFoundError:
+            snap = None
+        if mode == TableWriteMode.CREATE and snap is not None:
             raise ValueError(f"table {namespace}.{table} already exists")
-        if not exists:
+        if snap is None:
             if mode not in (TableWriteMode.AUTO, TableWriteMode.CREATE):
                 raise TableNotFoundError(f"{namespace}.{table}")
             self.create_table(
@@ -1662,11 +1672,12 @@ class Catalog:
             t0 = time.monotonic()
             try:
                 return self._write_once(
-                    df, table, namespace, mode, commit_properties
+                    df, table, namespace, mode, commit_properties, snap
                 )
             except CommitConflictError:
                 if attempt == max_commit_retries - 1:
                     raise
+                snap = None
                 # Full-jitter backoff scaled by the MEASURED attempt
                 # cost: a CoW merge recompute is a whole Spark job, so a
                 # fixed few-hundred-ms backoff is noise against it and a
@@ -1686,8 +1697,10 @@ class Catalog:
         namespace: str,
         mode: str,
         commit_properties: dict[str, str] | None = None,
+        snap: Snapshot | None = None,
     ) -> None:
-        snap = self.snapshot(table, namespace)
+        if snap is None:
+            snap = self.snapshot(table, namespace)
         if any(f.content_type for f in snap.files):
             # Mirror guard of put_files: schema'd writes can't mix into a
             # schemaless/binary table (`catalog/main/impl.py:318-331`).

@@ -9,6 +9,16 @@ column min/max stats recorded in the commit log (the reference's delta
 stats, `compute/stats/models/delta_stats.py`, reborn as Delta-style
 skipping stats).
 
+Small in-memory payloads skip the Spark write job: an unpartitioned,
+unsorted payload of allow-listed column types whose rows already live
+in the driver (a local relation: `local_df`, createDataFrame from
+pandas, INSERT ... VALUES) or come from a one-partition range, under a
+fixed size estimate, is collected once with `toArrow()` and written by
+pyarrow through the fs seam — the reference's own path for small
+deltas. Encoding and statistics follow parquet-mr's outcome and the
+files are cut as Spark's tasks would cut them, so the footer stats and
+the file layout do not depend on which writer ran.
+
 Each commit writes under its own `data/{uuid}/` directory so concurrent
 writers never collide on filenames and failed writes are garbage, not
 corruption (cleaned by vacuum).
@@ -16,13 +26,16 @@ corruption (cleaned by vacuum).
 
 from __future__ import annotations
 
+import math
 import os
 import uuid
 from typing import Any
 from urllib.parse import unquote
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, types as T
 
 from deltacat_spark.storage.fs import LOCAL_FS
 from deltacat_spark.plans.transforms import (
@@ -67,11 +80,55 @@ def write_data_files(
     deterministic hash of the row, never written to the files.
 
     `fs` (`storage/fs.py` seam): Spark writes to ``fs.spark_path(dest)``
-    (the URI its Hadoop layer resolves) and the driver-side footer-stats
-    pass reads back through the seam — so tables on object stores use
-    one consistent path mapping for data and control plane.
+    (the URI its Hadoop layer resolves), the driver-side Arrow writer
+    and the footer-stats pass go through the seam — so tables on object
+    stores use one consistent path mapping for data and control plane.
     """
     dest = fs.join(table_root, "data", uuid.uuid4().hex)
+    tasks = _driver_writable(df, partition_scheme, sort_scheme)
+    if not (tasks and _write_arrow(df, dest, max_records_per_file, fs, tasks)):
+        _write_spark(
+            df,
+            dest,
+            partition_scheme,
+            sort_scheme,
+            max_records_per_file,
+            partition_salt,
+            fs,
+        )
+    adds = collect_add_actions(dest, table_root, fs=fs)
+    names = set(df.columns)
+    if bloom_columns:
+        from deltacat_spark.storage.bloom import attach_blooms, eligible_columns
+
+        cols = eligible_columns(df, [c for c in bloom_columns if c in names])
+        if cols:
+            try:
+                attach_blooms(adds, table_root, cols, df.sparkSession, fs)
+            except Exception as e:  # pragma: no cover - exercised via test
+                # Blooms are a read optimization, never a durability
+                # dependency: a failed bloom pass must not fail the
+                # commit. Files without bloom_ref simply don't skip.
+                import warnings
+
+                warnings.warn(
+                    f"bloom filter pass failed, committing without "
+                    f"blooms: {type(e).__name__}: {e}"
+                )
+    return adds
+
+
+def _write_spark(
+    df: DataFrame,
+    dest: str,
+    partition_scheme: list[PartitionKey] | None,
+    sort_scheme: list[SortKey] | None,
+    max_records_per_file: int,
+    partition_salt: int | None,
+    fs,
+) -> None:
+    """One Spark write job: one file per task (per partition directory),
+    sliced by `max_records_per_file`."""
     # A delta payload need not carry every table column: a DELETE delta
     # is a key filter, a partial-upsert delta a column subset. Partition
     # and sort keys whose source column is absent are skipped — the
@@ -116,25 +173,203 @@ def write_data_files(
     if part_cols:
         writer = writer.partitionBy(*part_cols.keys())
     writer.parquet(fs.spark_path(dest))
-    adds = collect_add_actions(dest, table_root, fs=fs)
-    if bloom_columns:
-        from deltacat_spark.storage.bloom import attach_blooms, eligible_columns
 
-        cols = eligible_columns(df, [c for c in bloom_columns if c in names])
-        if cols:
-            try:
-                attach_blooms(adds, table_root, cols, df.sparkSession, fs)
-            except Exception as e:  # pragma: no cover - exercised via test
-                # Blooms are a read optimization, never a durability
-                # dependency: a failed bloom pass must not fail the
-                # commit. Files without bloom_ref simply don't skip.
-                import warnings
 
-                warnings.warn(
-                    f"bloom filter pass failed, committing without "
-                    f"blooms: {type(e).__name__}: {e}"
+# Spark types the driver-side writer round-trips exactly: pyarrow gives
+# them the parquet physical type, logical annotation and footer stats
+# Spark's writer gives them. TimestampType is left out on purpose:
+# Spark writes it as INT96 without stats, pyarrow as INT64 with
+# tz-aware stats whose isoformat() ("...+00:00") would be compared as
+# strings against the naive payload bounds of `_split_by_key_overlap`
+# and could call an overlapping file disjoint. Decimal and nested
+# types stay on Spark until their round trip and stats are shown to
+# match.
+_DRIVER_WRITE_TYPES = (
+    T.BooleanType,
+    T.ByteType,
+    T.ShortType,
+    T.IntegerType,
+    T.LongType,
+    T.FloatType,
+    T.DoubleType,
+    T.StringType,
+    T.BinaryType,
+    T.DateType,
+    T.TimestampNTZType,
+)
+
+
+# Largest payload the driver collects, by the optimizer's estimate
+# (string and binary values are estimated at Spark's 20-byte default
+# width). A fixed bound, deliberately not tied to a session option.
+_DRIVER_WRITE_MAX_BYTES = 10 << 20
+
+# Physical leaves whose rows already live in the driver (LocalTableScan:
+# createDataFrame from pandas/Arrow, `local_df`, INSERT ... VALUES) or
+# are generated from constants (Range). A cached payload (InMemoryTableScan)
+# counts by the plan it caches. Every other leaf (file scans, RDD scans
+# such as streaming micro-batches or createDataFrame from a list) reads
+# data of unknown size and keeps the Spark write job.
+_DRIVER_WRITE_LEAVES = ("LocalTableScan", "Range")
+
+# Physical nodes that keep every row in its task and in order.
+_ROW_PRESERVING = ("Project", "WholeStageCodegen", "InputAdapter", "ColumnarToRow")
+
+
+def _in_memory(plan) -> bool:
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        name = leaf.nodeName()
+        if name == "InMemoryTableScan":
+            if not _in_memory(leaf.relation().cachedPlan()):
+                return False
+        elif name not in _DRIVER_WRITE_LEAVES:
+            return False
+    return True
+
+
+def _local_tasks(plan) -> int:
+    """Task count of the local relation `plan` passes through unchanged
+    (row-preserving nodes and caches only), else 0."""
+    while True:
+        name = plan.nodeName()
+        if name == "LocalTableScan":
+            return plan.execute().getNumPartitions()
+        if name == "InMemoryTableScan":
+            plan = plan.relation().cachedPlan()
+        elif name.split(" ")[0] in _ROW_PRESERVING:
+            plan = plan.children().apply(0)
+        else:
+            return 0
+
+
+def _driver_writable(
+    df: DataFrame,
+    partition_scheme: list[PartitionKey] | None,
+    sort_scheme: list[SortKey] | None,
+) -> int:
+    """Number of Spark tasks whose files the driver-side Arrow writer
+    reproduces for `df`, or 0 when the payload keeps the Spark write
+    job (and its Hadoop file-commit protocol).
+
+    Checks run cheapest first. The analyzed plan already exists, so the
+    `maxRows` check is free and rejects every unbounded plan (all
+    MERGE/DELETE rewrites, streaming micro-batches) before any
+    planning. The leaf check then rejects every plan that reads table
+    files or an RDD, including bounded ones such as a `limit()` over a
+    scan. The payload is either one output partition, or a local
+    relation passed through unchanged, written as the tasks Spark
+    slices it into (a multi-partition range stays on Spark). The
+    physical plan and size estimate come from the same `QueryExecution`
+    that `toArrow()` then runs, so a qualifying write is planned once."""
+    if partition_scheme or sort_scheme:
+        return 0
+    for f in df.schema.fields:
+        dt = f.dataType
+        if type(dt) not in _DRIVER_WRITE_TYPES or (
+            isinstance(dt, T.StringType) and dt != T.StringType()  # collated
+        ):
+            return 0
+    qe = df._jdf.queryExecution()
+    if not qe.analyzed().maxRows().isDefined():
+        return 0
+    plan = qe.executedPlan()
+    if not _in_memory(plan):
+        return 0
+    if int(qe.optimizedPlan().stats().sizeInBytes()) > _DRIVER_WRITE_MAX_BYTES:
+        return 0
+    if plan.outputPartitioning().numPartitions() == 1:
+        return 1
+    return _local_tasks(plan)
+
+
+def _write_arrow(
+    df: DataFrame, dest: str, max_records_per_file: int, fs, tasks: int = 1
+) -> bool:
+    """Collect `df` and write it under `dest` as Spark's write job over
+    `tasks` partitions would: task i holds rows ``[i*n//tasks,
+    (i+1)*n//tasks)`` (Spark's slicing of a local collection and of a
+    range), one parquet file (one row group) per `max_records_per_file`
+    slice of a task (<= 0 means one file per task), no file for an empty
+    task.
+
+    False, with nothing written, when a floating column holds NaN:
+    parquet-mr records NaN as the column's max where pyarrow leaves NaN
+    out of min/max, and the footer stats must not depend on the writer.
+    """
+    table = df.toArrow()
+    for col in table.columns:
+        if pa.types.is_floating(col.type) and pc.any(pc.is_nan(col)).as_py():
+            return False
+    n = table.num_rows
+    job = uuid.uuid4()
+    for task in range(tasks):
+        lo, hi = task * n // tasks, (task + 1) * n // tasks
+        step = max_records_per_file if max_records_per_file > 0 else hi - lo
+        for i, start in enumerate(range(lo, hi, max(step, 1))):
+            part = table.slice(start, min(step, hi - start))
+            path = fs.join(
+                dest, f"part-{task:05d}-{job}-c{i:03d}.snappy.parquet"
+            )
+            with fs.open_output_binary(path) as fh:
+                pq.write_table(
+                    part,
+                    fh,
+                    row_group_size=part.num_rows,
+                    compression="snappy",
+                    use_dictionary=_dictionary_columns(part),
+                    write_statistics=_statistics_columns(part),
+                    store_schema=False,
                 )
-    return adds
+    return True
+
+
+_BYTE_TYPES = (pa.string(), pa.large_string(), pa.binary(), pa.large_binary())
+
+
+def _statistics_columns(table: pa.Table) -> list[str]:
+    """Columns to write statistics for: parquet-mr drops a column
+    chunk's statistics, null count included, when min and max together
+    take 4096 bytes or more."""
+    out = []
+    for name, col in zip(table.column_names, table.columns):
+        if col.type in _BYTE_TYPES:
+            mm = pc.min_max(col)
+            lo, hi = (pc.binary_length(mm[k]).as_py() for k in ("min", "max"))
+            if lo is not None and lo + hi >= 4096:
+                continue
+        out.append(name)
+    return out
+
+
+def _dictionary_columns(table: pa.Table) -> list[str]:
+    """Columns worth dictionary-encoding: parquet-mr's outcome, which
+    keeps a column's dictionary only when dictionary page plus
+    bit-packed indices is smaller than the plain encoding (pyarrow's
+    default dictionary-encodes every column, ~18% more bytes on
+    high-cardinality data)."""
+    out = []
+    for name, col in zip(table.column_names, table.columns):
+        if pa.types.is_boolean(col.type):
+            continue  # parquet-mr never dictionary-encodes booleans
+        values = pc.drop_null(col)
+        n = len(values)
+        if n == 0:
+            continue
+        uniq = pc.unique(values)
+        d = len(uniq)
+        if col.type in _BYTE_TYPES:
+            plain = pc.sum(pc.binary_length(values)).as_py() + 4 * n
+            page = pc.sum(pc.binary_length(uniq)).as_py() + 4 * d
+        else:
+            # INT8/INT16 are stored as INT32
+            width = max(4, col.type.bit_width // 8)
+            plain, page = width * n, width * d
+        indices = (n * (d - 1).bit_length() + 7) // 8
+        if page + indices < plain:
+            out.append(name)
+    return out
 
 
 def collect_add_actions(
@@ -207,6 +442,10 @@ def _footer_stats(path: str, fs=LOCAL_FS) -> dict[str, Any]:
     # top-level columns, including all-null ones that carry no min/max.
     nulls: dict[str, int] = {}
     nulls_bad: set = set()
+    # columns with a NaN bound in some row group: parquet-mr sorts NaN
+    # above every value (as Spark does) and records it as the max, which
+    # bounds nothing a predicate can compare against — no range at all.
+    nan_bound: set = set()
     ncols = min(md.num_columns, _STATS_MAX_COLS)
     for rg in range(md.num_row_groups):
         g = md.row_group(rg)
@@ -237,6 +476,11 @@ def _footer_stats(path: str, fs=LOCAL_FS) -> dict[str, Any]:
                     mn, mx = mn.decode(), mx.decode()
                 except UnicodeDecodeError:
                     continue
+            if isinstance(mn, float) and (math.isnan(mn) or math.isnan(mx)):
+                nan_bound.add(name)
+            if name in nan_bound:
+                stats.pop(name, None)
+                continue
             cur = stats.get(name)
             if cur is None:
                 stats[name] = {"min": mn, "max": mx}

@@ -272,12 +272,22 @@ class CommitLog:
         self.txn_stamp = txn_stamp
 
     # -- read ----------------------------------------------------------
-    def versions(self) -> list[int]:
-        out = []
+    def listing(self) -> tuple[list[int], list[int]]:
+        """(commit versions, checkpoint versions), each ascending, from
+        ONE listing of the log directory — on an object store every
+        listing is a LIST round-trip."""
+        versions, checkpoints = [], []
         for name in self.fs.list_dir(self.log_dir):
-            if name.endswith(".json") and name[:-5].isdigit():
-                out.append(int(name[:-5]))
-        return sorted(out)
+            if name.endswith(".checkpoint.json"):
+                v = name.split(".")[0]
+                if v.isdigit():
+                    checkpoints.append(int(v))
+            elif name.endswith(".json") and name[:-5].isdigit():
+                versions.append(int(name[:-5]))
+        return sorted(versions), sorted(checkpoints)
+
+    def versions(self) -> list[int]:
+        return self.listing()[0]
 
     def latest_version(self) -> int | None:
         vs = self.versions()
@@ -292,9 +302,12 @@ class CommitLog:
         version_as_of: int | None = None,
         timestamp_as_of: int | None = None,
         start_after: int = 0,
+        versions: "list[int] | None" = None,
     ) -> list[Commit]:
+        """Commits after `start_after`, up to the time-travel bound.
+        `versions`: an already-listed version list (saves a listing)."""
         commits = []
-        for v in self.versions():
+        for v in self.versions() if versions is None else versions:
             if v <= start_after:
                 continue
             if version_as_of is not None and v > version_as_of:
@@ -319,13 +332,7 @@ class CommitLog:
 
     # -- checkpoints ----------------------------------------------------
     def checkpoints(self) -> list[int]:
-        out = []
-        for name in self.fs.list_dir(self.log_dir):
-            if name.endswith(".checkpoint.json"):
-                v = name.split(".")[0]
-                if v.isdigit():
-                    out.append(int(v))
-        return sorted(out)
+        return self.listing()[1]
 
     def write_checkpoint(self, version: int, state: dict) -> None:
         path = self.fs.join(self.log_dir, f"{version:020d}.checkpoint.json")
@@ -354,11 +361,17 @@ class CommitLog:
                 pass  # another pruner won the race — same outcome
         return doomed
 
-    def latest_checkpoint(self) -> "tuple[int, dict] | None":
+    def latest_checkpoint(
+        self, checkpoints: "list[int] | None" = None
+    ) -> "tuple[int, dict] | None":
+        """Newest checkpoint as (version, state). `checkpoints`: an
+        already-listed checkpoint list, used for the first attempt."""
         # Two attempts: a concurrent writer's prune may delete the file
         # between our listing and our read — refresh and retry once.
+        cps = checkpoints
         for _ in range(2):
-            cps = self.checkpoints()
+            if cps is None:
+                cps = self.checkpoints()
             if not cps:
                 return None
             v = cps[-1]
@@ -369,7 +382,7 @@ class CommitLog:
                     )
                 )
             except FileNotFoundError:
-                continue
+                cps = None
         return None
 
     # -- write ---------------------------------------------------------

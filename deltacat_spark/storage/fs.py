@@ -1,13 +1,17 @@
-"""Filesystem seam for the control plane (commit log, checkpoints,
-transaction markers, vacuum, file staging).
+"""Filesystem seam for the table format (commit log, checkpoints,
+transaction markers, vacuum, file staging, footer reads, small data
+files).
 
 The reference catalog runs against any PyArrow filesystem
 (`deltacat/catalog/model/properties.py` resolves a `filesystem` from the
-root URI); this module is the equivalent seam for deltacat_spark. Only
-CONTROL-PLANE IO goes through it — a few KB of JSON per commit, listings,
-and staging copies. The data plane (parquet scan/write) is executed by
-Spark against plain paths/URIs and already works on any Hadoop-supported
-store (file://, s3a://, gs://, abfs://) without this seam.
+root URI); this module is the equivalent seam for deltacat_spark. The
+control plane goes through it — a few KB of JSON per commit, listings,
+and staging copies — and so does the driver's share of the data plane:
+parquet footer reads for commit stats and the driver-side Arrow writer
+for small in-memory payloads (`catalog/io.py`,
+``open_output_binary``). Scans and every other write are executed by
+Spark against ``spark_path`` URIs and work on any Hadoop-supported store
+(file://, s3a://, gs://, abfs://) without this seam.
 
 Two implementations:
 
@@ -96,6 +100,13 @@ class LocalFS:
     # -- write ---------------------------------------------------------
     def makedirs(self, path: str) -> None:
         os.makedirs(path, exist_ok=True)
+
+    def open_output_binary(self, path: str):
+        """Binary output stream for a new file (parents created). Not
+        atomic: data files land in a fresh per-commit directory and are
+        garbage until a commit references them."""
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        return open(path, "wb")
 
     def write_text_atomic(self, path: str, payload: str) -> None:
         """Readers never observe a partial file (same-dir tmp + rename)."""
@@ -233,6 +244,12 @@ class ArrowFS:
 
     def makedirs(self, path: str) -> None:
         self.fs.create_dir(path, recursive=True)
+
+    def open_output_binary(self, path: str):
+        parent = path.rsplit("/", 1)[0]
+        if parent and parent != path:
+            self.fs.create_dir(parent, recursive=True)
+        return self.fs.open_output_stream(path)
 
     def write_text_atomic(self, path: str, payload: str) -> None:
         # Object-store PUT is atomic per object; for directory-style

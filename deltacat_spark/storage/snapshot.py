@@ -118,8 +118,13 @@ class Snapshot:
         log: CommitLog,
         version_as_of: int | None = None,
         timestamp_as_of: int | None = None,
+        listing: "tuple[list[int], list[int]] | None" = None,
     ) -> "Snapshot":
-        ckpt = log.latest_checkpoint()
+        """Resolve from the newest usable checkpoint plus the commits
+        after it. `listing`: ``log.listing()`` already taken by the
+        caller; otherwise one is taken here."""
+        versions, checkpoints = listing if listing is not None else log.listing()
+        ckpt = log.latest_checkpoint(checkpoints)
         if ckpt is not None:
             ckpt_version, state = ckpt
             usable = (
@@ -133,7 +138,10 @@ class Snapshot:
                 tail, unresolved = cls._txn_visible(
                     log,
                     log.replay(
-                        version_as_of, timestamp_as_of, start_after=ckpt_version
+                        version_as_of,
+                        timestamp_as_of,
+                        start_after=ckpt_version,
+                        versions=versions,
                     ),
                 )
                 snap._apply(tail)
@@ -141,7 +149,7 @@ class Snapshot:
                 snap.has_unresolved_txn = unresolved
                 snap._finish()
                 return snap
-        commits = log.replay(version_as_of, timestamp_as_of)
+        commits = log.replay(version_as_of, timestamp_as_of, versions=versions)
         if not commits:
             raise FileNotFoundError(f"no commits in {log.log_dir}")
         commits, unresolved = cls._txn_visible(log, commits)
