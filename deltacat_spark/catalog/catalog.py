@@ -15,10 +15,13 @@ anti-join program.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
+import random
 import re
 import shutil
+import time
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -48,6 +51,7 @@ from deltacat_spark.storage.commit import (
     CommitLog,
     DeltaType,
     TxnMarkers,
+    default_rebase_rule,
 )
 from deltacat_spark.storage.fs import LOCAL_FS
 from deltacat_spark.storage.snapshot import FileEntry, Snapshot
@@ -85,6 +89,28 @@ ENGINE_PROPERTY_KEYS = frozenset(DEFAULT_PROPERTIES) | {
     "cdc.enabled",
     "bloom_filter_columns",
 }
+
+# Ops that rewrite the table wholesale: a CoW rewrite never rebases past
+# one, whatever its stats say.
+_WHOLESALE_OPS = frozenset({"REPLACE", "TRUNCATE", "RESTORE", "OPTIMIZE", "CLONE"})
+
+# OPTIMIZE modes whose commit records a partition scope it stayed inside.
+_SCOPED_OPTIMIZE_MODES = ("partition", "partition-incremental", "partition-zorder")
+
+
+def _clashes(commit: Commit, inter: Commit) -> bool:
+    """True when intervening commit `inter` changed what `commit` was
+    computed against in a way no stats or scope argument clears: it
+    carries table metadata or an engine property, or it removes a file
+    `commit` also removes. Shared by the CoW and scoped-OPTIMIZE rebase
+    rules."""
+    return bool(
+        inter.schema_json
+        or inter.partition_scheme
+        or inter.sort_scheme
+        or set(inter.properties or ()) & ENGINE_PROPERTY_KEYS
+        or set(commit.removes) & set(inter.removes)
+    )
 
 
 def _split_set_list(setlist: str) -> list[tuple[str, str]]:
@@ -314,6 +340,71 @@ def _partition_scopes_disjoint(a: dict, b: dict) -> bool:
     return any(
         k in b and not (_vals(av) & _vals(b[k])) for k, av in a.items()
     )
+
+
+def _scoped_optimize_rebase_rule(commit: Commit, partition_filter: dict):
+    """`CommitLog.commit` predicate for a partition-scoped OPTIMIZE:
+    rebase past ANOTHER scoped OPTIMIZE on a provably disjoint scope —
+    this commit's rewrite read nothing the winner touched, so bumping
+    the version and keeping the SAME actions saves a whole compaction
+    job. Anything else (data writes, metadata, wholesale ops, unprovable
+    scopes, both scopes swallowing the same pre-evolution "unknown
+    partition" files) forces the recompute."""
+
+    def rebase_past(inter: Commit) -> bool:
+        im = inter.metrics or {}
+        return (
+            inter.operation == "OPTIMIZE"
+            and im.get("mode") in _SCOPED_OPTIMIZE_MODES
+            and not im.get("partition_fallback")
+            and not _clashes(commit, inter)
+            and _partition_scopes_disjoint(
+                partition_filter, im.get("partition_filter") or {}
+            )
+        )
+
+    return rebase_past
+
+
+def _retry_on_conflict(attempt_fn, retries: int):
+    """Run `attempt_fn` — one whole op that resolves its own snapshot
+    — and rerun it on CommitConflictError, up to `retries` attempts.
+    This is the recompute half of optimistic concurrency:
+    `CommitLog.commit` has already rebased whatever its rule allows,
+    so a conflict here means the op must be planned again.
+
+    Full-jitter backoff scaled by the MEASURED attempt cost: a CoW
+    merge recompute is a whole Spark job, so a fixed few-hundred-ms
+    backoff is noise against it and a thundering herd (N writers
+    re-planning in lockstep) starves individual writers — one winner
+    per round, everyone else re-collides until retries exhaust.
+    Sleeping up to attempt_cost × min(attempt+1, 4) disperses the
+    herd across multiples of the actual contention window at any
+    scale."""
+    for attempt in range(retries):
+        t0 = time.monotonic()
+        try:
+            return attempt_fn()
+        except CommitConflictError:
+            if attempt == retries - 1:
+                raise
+            cost = max(0.05, time.monotonic() - t0)
+            time.sleep(random.uniform(0, cost * min(attempt + 1, 4)))
+
+
+def _retried(retries: int):
+    """Method decorator for a single-commit op that resolves its own
+    snapshot: a lost version slot reruns the whole op through
+    `_retry_on_conflict`."""
+
+    def deco(op):
+        @functools.wraps(op)
+        def run(self, *args, **kwargs):
+            return _retry_on_conflict(lambda: op(self, *args, **kwargs), retries)
+
+        return run
+
+    return deco
 
 
 def _bloom_columns(props: dict) -> "list[str] | None":
@@ -580,6 +671,7 @@ class Catalog:
         # do a per-object move inside ArrowFS.rename.
         self.fs.rename(src, dst)
 
+    @_retried(10)
     def truncate_table(self, table: str, namespace: str = DEFAULT_NAMESPACE) -> None:
         snap = self.snapshot(table, namespace)
         commit = Commit(
@@ -733,12 +825,9 @@ class Catalog:
         # RESTORE does not commute with concurrent writes: recompute the
         # current live set and retry on version collision, same contract
         # as write_to_table.
-        for attempt in range(10):
-            try:
-                return self._restore_once(table, namespace, version, timestamp)
-            except CommitConflictError:
-                if attempt == 9:
-                    raise
+        return _retry_on_conflict(
+            lambda: self._restore_once(table, namespace, version, timestamp), 10
+        )
 
     def _restore_once(
         self,
@@ -820,6 +909,7 @@ class Catalog:
         self._log(table, namespace).commit(commit)
         return commit.version
 
+    @_retried(10)
     def alter_table(
         self,
         table: str,
@@ -1665,30 +1755,15 @@ class Catalog:
                 properties=properties,
                 fail_if_exists=False,
             )
-        import random
-        import time
-
-        for attempt in range(max_commit_retries):
-            t0 = time.monotonic()
-            try:
-                return self._write_once(
-                    df, table, namespace, mode, commit_properties, snap
-                )
-            except CommitConflictError:
-                if attempt == max_commit_retries - 1:
-                    raise
-                snap = None
-                # Full-jitter backoff scaled by the MEASURED attempt
-                # cost: a CoW merge recompute is a whole Spark job, so a
-                # fixed few-hundred-ms backoff is noise against it and a
-                # thundering herd (N writers re-planning in lockstep)
-                # starves individual writers — one winner per round,
-                # everyone else re-collides until retries exhaust.
-                # Sleeping up to attempt_cost × min(attempt+1, 4)
-                # disperses the herd across multiples of the actual
-                # contention window at any scale.
-                cost = max(0.05, time.monotonic() - t0)
-                time.sleep(random.uniform(0, cost * min(attempt + 1, 4)))
+        # Only the first attempt reuses that snapshot; a retry resolves
+        # a fresh one.
+        snaps = iter([snap])
+        _retry_on_conflict(
+            lambda: self._write_once(
+                df, table, namespace, mode, commit_properties, next(snaps, None)
+            ),
+            max_commit_retries,
+        )
 
     def _write_once(
         self,
@@ -1898,14 +1973,14 @@ class Catalog:
                     schema_json=schema_json,
                     actions=adds,
                 )
-            if cow:
-                self._commit_cow(
-                    log,
-                    commit,
-                    lambda: self._payload_bounds(df, delete_cols),
+            log.commit(
+                commit,
+                self._cow_rebase_rule(
+                    commit, lambda: self._payload_bounds(df, delete_cols)
                 )
-            else:
-                log.commit(commit)
+                if cow
+                else None,
+            )
             return
 
         # MERGE
@@ -1987,18 +2062,18 @@ class Catalog:
                 schema_json=schema_json,
                 actions=adds,
             )
-        if cow:
-            try:
-                self._commit_cow(
-                    log,
-                    commit,
-                    lambda: self._payload_bounds(batch, merge_keys),
+        try:
+            log.commit(
+                commit,
+                self._cow_rebase_rule(
+                    commit, lambda: self._payload_bounds(batch, merge_keys)
                 )
-            finally:
-                if cached_batch:
-                    self._unpin(batch)
-        else:
-            log.commit(commit)
+                if cow
+                else None,
+            )
+        finally:
+            if cached_batch:
+                self._unpin(batch)
 
     @staticmethod
     def _table_constraints(props: dict) -> "dict[str, str]":
@@ -2294,71 +2369,38 @@ class Catalog:
                 return False
         return True
 
-    def _commit_cow(self, log: CommitLog, commit: Commit, bounds_fn) -> None:
-        """Commit a fully-resolved CoW rewrite with stats-based rebase.
+    @classmethod
+    def _cow_rebase_rule(cls, commit: Commit, bounds_fn):
+        """`CommitLog.commit` predicate for a fully-resolved CoW rewrite.
 
         A CoW MERGE/DELETE computed against snapshot S collides with any
         commit that lands first. Recomputing is a whole Spark job, but
         the collision is often with a DISJOINT writer (different key
-        range). Delta-style resolution: rebase (bump version, keep the
-        SAME actions) when every live intervening commit provably does
-        not interact with ours — no table-metadata change, no wholesale
-        op (REPLACE/TRUNCATE/RESTORE/OPTIMIZE), removes disjoint from
-        our removes, and its added files' key stats disjoint from our
-        payload's key bounds. On a resolved CoW table one key lives in
-        one file, so any cross-writer key interaction implies one of
-        those observable overlaps (conservative fallbacks — missing
-        stats count as overlap — force the recompute path instead).
-        Raises CommitConflictError when disjointness can't be proven;
-        the caller's retry loop then recomputes from a fresh snapshot.
-        """
-        bounds: "dict | None" = None
-        while True:
-            try:
-                log.commit(commit)
-                return
-            except CommitConflictError:
-                if bounds is None:
-                    # Lazy: the payload bounds aggregate only runs when a
-                    # conflict actually happens, never on the happy path.
-                    bounds = bounds_fn()
-                if not bounds:
-                    raise
-                latest = log.latest_version()
-                our_removes = set(commit.removes)
-                for v in range(commit.version, latest + 1):
-                    inter = log.read_commit(v)
-                    pt = inter.pending_txn
-                    if (
-                        pt
-                        and pt != self._txn_ctx
-                        and self._txn_markers.status(pt) == "aborted"
-                    ):
-                        continue  # invisible slot
-                    if (
-                        inter.schema_json
-                        or inter.partition_scheme
-                        or inter.sort_scheme
-                        or set(inter.properties or ()) & ENGINE_PROPERTY_KEYS
-                    ):
-                        raise
-                    if inter.operation in (
-                        "REPLACE",
-                        "TRUNCATE",
-                        "RESTORE",
-                        "OPTIMIZE",
-                        "CLONE",
-                    ):
-                        raise
-                    if our_removes & set(inter.removes):
-                        raise
-                    for a in inter.adds:
-                        if self._stats_overlap(a.get("stats"), bounds):
-                            raise CommitConflictError(
-                                f"concurrent {inter.operation} at version "
-                                f"{inter.version} overlaps payload key range"
-                            )
-                commit.version = latest + 1
+        range). Delta-style resolution: besides what the default rule
+        allows, rebase past an intervening commit that provably does not
+        interact with ours — no `_clashes`, no wholesale op, and its
+        added files' key stats disjoint from our payload's key bounds.
+        On a resolved CoW table one key lives in one file, so any
+        cross-writer key interaction implies one of those observable
+        overlaps (missing stats count as overlap and force the
+        recompute). `bounds_fn` runs the payload-bounds aggregate lazily:
+        only when a conflict needs it, never on the happy path."""
+        default = default_rebase_rule(commit)
+        bounds = None
+
+        def rebase_past(inter: Commit) -> bool:
+            nonlocal bounds
+            if default(inter):
+                return True
+            if _clashes(commit, inter) or inter.operation in _WHOLESALE_OPS:
+                return False
+            if bounds is None:
+                bounds = bounds_fn()
+            return bool(bounds) and not any(
+                cls._stats_overlap(a.get("stats"), bounds) for a in inter.adds
+            )
+
+        return rebase_past
 
     def _normalize_merge_batch(self, df: DataFrame, schema: Schema) -> DataFrame:
         """Dedupe the incoming batch per merge key (last row wins within
@@ -2370,6 +2412,7 @@ class Catalog:
         order = order + [F.desc("__dcs_row")]
         return dedupe_last_writer(df, keys, order).drop("__dcs_row")
 
+    @_retried(10)
     def delete_where(
         self,
         table: str,
@@ -4717,6 +4760,7 @@ class Catalog:
             ),
         }
 
+    @_retried(10)
     def analyze_table(
         self,
         table: str,
@@ -5067,19 +5111,17 @@ class Catalog:
         carries removes so it never auto-rebases — if a writer lands
         mid-compaction, recompute from the fresh snapshot (the orphaned
         output files of the losing attempt are vacuum-reclaimable)."""
-        for attempt in range(max_commit_retries):
-            try:
-                return self._optimize_once(
-                    table,
-                    namespace,
-                    small_file_records,
-                    zorder_by,
-                    zorder_bits,
-                    partition_filter,
-                )
-            except CommitConflictError:
-                if attempt == max_commit_retries - 1:
-                    raise
+        _retry_on_conflict(
+            lambda: self._optimize_once(
+                table,
+                namespace,
+                small_file_records,
+                zorder_by,
+                zorder_bits,
+                partition_filter,
+            ),
+            max_commit_retries,
+        )
 
     def _optimize_once(
         self,
@@ -5255,66 +5297,14 @@ class Catalog:
             },
             actions=adds + [{"remove": {"path": f.path}} for f in rewrite],
         )
-        log = self._log(table, namespace)
-        while True:
-            try:
-                log.commit(commit)
-                return
-            except CommitConflictError:
-                # Disjoint-scope rebase (same relaxation CoW writes got):
-                # when every intervening commit is ANOTHER partition-
-                # scoped OPTIMIZE on a provably disjoint scope, this
-                # commit's rewrite read nothing the winner touched —
-                # bump the version and keep the SAME actions instead of
-                # recomputing a whole compaction job. Anything else
-                # (data writes, metadata, wholesale ops, unprovable
-                # scopes) re-raises into the recompute retry loop.
-                if mode not in (
-                    "partition",
-                    "partition-incremental",
-                    "partition-zorder",
-                ):
-                    raise
-                latest = log.latest_version()
-                our_removes = set(commit.removes)
-                for v in range(commit.version, latest + 1):
-                    inter = log.read_commit(v)
-                    pt = inter.pending_txn
-                    if (
-                        pt
-                        and pt != self._txn_ctx
-                        and self._txn_markers.status(pt) == "aborted"
-                    ):
-                        continue  # invisible slot
-                    if (
-                        inter.schema_json
-                        or inter.partition_scheme
-                        or inter.sort_scheme
-                        or set(inter.properties or ()) & ENGINE_PROPERTY_KEYS
-                    ):
-                        raise
-                    if inter.operation != "OPTIMIZE":
-                        raise
-                    im = inter.metrics or {}
-                    if im.get("mode") not in (
-                        "partition",
-                        "partition-incremental",
-                        "partition-zorder",
-                    ) or im.get("partition_fallback"):
-                        raise
-                    if not _partition_scopes_disjoint(
-                        partition_filter, im.get("partition_filter") or {}
-                    ):
-                        raise
-                    if our_removes & set(inter.removes):
-                        # e.g. both scopes swallowed the same pre-
-                        # evolution "unknown partition" files
-                        raise CommitConflictError(
-                            f"concurrent scoped OPTIMIZE at version "
-                            f"{inter.version} removed overlapping files"
-                        )
-                commit.version = latest + 1
+        self._log(table, namespace).commit(
+            commit,
+            _scoped_optimize_rebase_rule(commit, partition_filter)
+            if mode in _SCOPED_OPTIMIZE_MODES
+            else None,
+        )
 
+    @_retried(3)
     def repartition_table_by_range(
         self,
         table: str,

@@ -76,8 +76,6 @@ def _commutes(c: "Commit") -> bool:
     )
 
 
-
-
 def _is_delta_add(c: "Commit") -> bool:
     """Merge-on-read MERGE/DELETE deltas are pure ADDS whose replay
     semantics are defined BY commit order ((version, file_index) picks
@@ -96,6 +94,20 @@ def _is_delta_add(c: "Commit") -> bool:
         and c.partition_scheme is None
         and c.sort_scheme is None
     )
+
+
+def default_rebase_rule(commit: "Commit"):
+    """`CommitLog.commit`'s default ``rebase_past`` predicate for
+    `commit`: an append-family commit (`_commutes`) or a MoR delta
+    (`_is_delta_add`) rebases past intervening commits of either kind.
+    Intervening add-only commits are fine to rebase past even when they
+    evolved the schema: auto-evolution is strictly additive, so our
+    (metadata-free) commit stays readable under the newer schema; only
+    the rebasing commit itself carrying metadata would clobber. Any
+    other commit rebases past nothing."""
+    if not (_commutes(commit) or _is_delta_add(commit)):
+        return lambda inter: False
+    return lambda inter: inter.operation in _COMMUTING_OPS or _is_delta_add(inter)
 
 
 class CommitConflictError(RuntimeError):
@@ -403,18 +415,23 @@ class CommitLog:
         return self._put_if_absent(commit.to_json(), commit.version)
 
     def commit(
-        self,
-        commit: Commit,
-        max_retries: int = 20,
+        self, commit: Commit, rebase_past=None, max_retries: int = 20
     ) -> Commit:
-        """Commit with optimistic rebase.
+        """Commit with optimistic rebase — the ONLY code that resolves a
+        lost version slot.
 
-        Append-family commits (APPEND/ADD/CHRONO/OPTIMIZE-free adds)
-        auto-rebase onto newer versions as long as every intervening
-        commit also commutes. Non-commuting collisions raise
-        :class:`CommitConflictError` — the caller recomputes from the
-        fresh snapshot (the reference behaves identically:
-        `transaction.py:1561-1571`)."""
+        On a lost slot: list the log once, read each intervening commit
+        once, and ask ``rebase_past(inter) -> bool`` of every LIVE one
+        (commits of an aborted catalog-level transaction are invisible
+        and never asked). All pass: bump the version and retry with the
+        SAME actions. Any fails: raise :class:`CommitConflictError` and
+        the caller recomputes from a fresh snapshot (the reference
+        behaves identically: `transaction.py:1561-1571`).
+
+        ``rebase_past`` defaults to `default_rebase_rule`; the catalog
+        passes its copy-on-write and scoped-OPTIMIZE rules here."""
+        if rebase_past is None:
+            rebase_past = default_rebase_rule(commit)
         for _ in range(max_retries):
             if commit.operation == "APPEND":
                 # Ordered appends take the commit version as their
@@ -424,46 +441,28 @@ class CommitLog:
                 return commit
             latest = self.latest_version()
             assert latest is not None
-            # Classify the occupying/intervening commits. A commit whose
-            # catalog-level transaction ABORTED is invisible to every
-            # snapshot — it merely occupies a version slot (e.g. the
-            # pending prefix of a failed multi-commit seal). Rebasing
-            # past it changes nothing the current commit was computed
-            # against, so it commutes with everything; only LIVE
-            # intervening commits constrain the rebase.
-            live = []
             for v in range(commit.version, latest + 1):
                 inter = self.read_commit(v)
-                pt = inter.pending_txn
-                if (
-                    pt
-                    and pt != self.current_txn
-                    and self.txn_status is not None
-                    and self.txn_status(pt) == "aborted"
-                ):
+                if self._aborted(inter):
                     continue
-                live.append(inter)
-            if live:
-                if not (_commutes(commit) or _is_delta_add(commit)):
+                if not rebase_past(inter):
                     raise CommitConflictError(
-                        f"version {commit.version} taken by a concurrent "
-                        f"writer (op={commit.operation} does not auto-rebase)"
+                        f"version {commit.version} taken: {commit.operation} "
+                        f"cannot rebase past concurrent {inter.operation} "
+                        f"at version {inter.version}"
                     )
-                for inter in live:
-                    # Intervening add-only commits are fine to rebase past
-                    # even when they evolved the schema: auto-evolution is
-                    # strictly additive, so our (metadata-free) commit stays
-                    # readable under the newer schema. Only the rebasing
-                    # commit itself carrying metadata is dangerous (it
-                    # would clobber). MoR merge/delete deltas are add-only
-                    # too (their order-dependence is resolved by the very
-                    # version order the rebase establishes).
-                    if inter.operation not in _COMMUTING_OPS and not (
-                        _is_delta_add(inter)
-                    ):
-                        raise CommitConflictError(
-                            f"concurrent non-commuting {inter.operation} at "
-                            f"version {inter.version}"
-                        )
             commit.version = latest + 1
         raise CommitConflictError("too many commit retries")
+
+    def _aborted(self, c: Commit) -> bool:
+        """A commit whose catalog-level transaction ABORTED is invisible
+        to every snapshot — it merely occupies a version slot (e.g. the
+        pending prefix of a failed multi-commit seal), so rebasing past
+        it changes nothing a commit was computed against."""
+        pt = c.pending_txn
+        return bool(
+            pt
+            and pt != self.current_txn
+            and self.txn_status is not None
+            and self.txn_status(pt) == "aborted"
+        )

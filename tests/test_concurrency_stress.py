@@ -204,7 +204,7 @@ def test_cow_commit_rebases_past_disjoint_writer(spark, tmp_path):
                      "stats": {"id": {"min": 1, "max": 4}}}}
         ],
     )
-    c._commit_cow(log, ours, lambda: {"id": (1, 4, False)})
+    log.commit(ours, c._cow_rebase_rule(ours, lambda: {"id": (1, 4, False)}))
     assert ours.version == 3 and log.latest_version() == 3
 
     # Overlapping key range -> no rebase.
@@ -225,7 +225,7 @@ def test_cow_commit_rebases_past_disjoint_writer(spark, tmp_path):
                           "stats": {"id": {"min": 4, "max": 4}}}}],
     )
     with pytest.raises(CommitConflictError):
-        c._commit_cow(log, clash, lambda: {"id": (4, 4, False)})
+        log.commit(clash, c._cow_rebase_rule(clash, lambda: {"id": (4, 4, False)}))
 
     # Metadata-carrying intervener -> no rebase even if stats disjoint.
     log.commit(
@@ -244,7 +244,9 @@ def test_cow_commit_rebases_past_disjoint_writer(spark, tmp_path):
                           "stats": {"id": {"min": 1, "max": 1}}}}],
     )
     with pytest.raises(CommitConflictError):
-        c._commit_cow(log, meta_clash, lambda: {"id": (1, 1, False)})
+        log.commit(
+            meta_clash, c._cow_rebase_rule(meta_clash, lambda: {"id": (1, 1, False)})
+        )
 
 
 def test_disjoint_cow_writers_all_land(spark, tmp_path):
