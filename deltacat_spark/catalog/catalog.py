@@ -421,17 +421,43 @@ def _bloom_columns(props: dict) -> "list[str] | None":
         cols = [str(c) for c in raw]
     return cols or None
 
+
+_READD_KEYS = (
+    "path",
+    "records",
+    "bytes",
+    "partition_values",
+    "stats",
+    "content_type",
+    "bloom_ref",
+)
+
+
+def _readd(f: FileEntry, src_root: "str | None" = None) -> dict:
+    """The `add` action that re-adds live data file `f` in a new commit
+    (RESTORE, CLONE): its path and footer metadata; the new commit gives
+    it its log position.
+
+    CLONE passes `src_root`: the path becomes absolute, which
+    `FileEntry.abs_path` passes through untouched (posix join), so every
+    read path resolves it without special-casing clones. `bloom_ref` is
+    dropped there: it is relative to the source root, and the clone
+    would resolve it under its own."""
+    add = {k: v for k, v in f.to_dict().items() if k in _READD_KEYS}
+    if src_root is not None:
+        add.pop("bloom_ref", None)
+        add["path"] = f.abs_path(src_root)
+    return {"add": add}
+
+
 _DATA_DELTAS = {DeltaType.APPEND, DeltaType.ADD, DeltaType.CHRONO, DeltaType.UPSERT, None}
 
 # MoR base/delta split (`_resolve_mor`): bypass the fold window for base
 # rows whose key no live delta touches, provided the deltas are small
 # enough that their distinct keys broadcast cheaply. Scale-adaptive by
-# construction (gates on commit-log record counts, not cluster size);
-# production tuning via env without a code change.
-_MOR_SPLIT_MIN_RATIO = int(os.environ.get("DCS_MOR_SPLIT_MIN_RATIO", "4"))
-_MOR_SPLIT_MAX_DELTA_RECORDS = int(
-    os.environ.get("DCS_MOR_SPLIT_MAX_DELTA_RECORDS", str(2_000_000))
-)
+# construction (gates on commit-log record counts, not cluster size).
+_MOR_SPLIT_MIN_RATIO = 4
+_MOR_SPLIT_MAX_DELTA_RECORDS = 2_000_000
 
 
 class TableNotFoundError(FileNotFoundError):
@@ -755,29 +781,7 @@ class Catalog:
             self.write_to_table(resolved, dst, namespace, mode="replace")
             return
         src_root = self._table_root(src, src_namespace)
-        adds = [
-            {
-                "add": {
-                    **{
-                        k: v
-                        for k, v in f.to_dict().items()
-                        if k
-                        in (
-                            "records",
-                            "bytes",
-                            "partition_values",
-                            "stats",
-                            "content_type",
-                        )
-                    },
-                    # Absolute path: FileEntry.abs_path() passes it through
-                    # untouched (posix join semantics), so every read path
-                    # resolves it without special-casing clones.
-                    "path": f.abs_path(src_root),
-                }
-            }
-            for f in snap.files
-        ]
+        adds = [_readd(f, src_root) for f in snap.files]
         if adds:
             commit = Commit(
                 version=2,
@@ -877,26 +881,9 @@ class Catalog:
                 commit_properties=wm_props or None,
             )
             return self.snapshot(table, namespace).version
-        adds = [
-            {
-                "add": {
-                    k: v
-                    for k, v in f.to_dict().items()
-                    if k
-                    in (
-                        "path",
-                        "records",
-                        "bytes",
-                        "partition_values",
-                        "stats",
-                        "content_type",
-                    )
-                }
-            }
-            # Snapshot.files is already (version, file_index)-sorted; the
-            # re-add preserves that total order via the new file_index.
-            for f in target.files
-        ]
+        # Snapshot.files is already (version, file_index)-sorted; the
+        # re-add preserves that total order via the new file_index.
+        adds = [_readd(f) for f in target.files]
         commit = Commit(
             version=cur.version + 1,
             operation="RESTORE",
@@ -1422,9 +1409,6 @@ class Catalog:
             )
         )
 
-    def _schema_at(self, snap: Snapshot, version: int) -> Schema | None:
-        return snap.schema_at(version)
-
     def _scan(
         self,
         snap: Snapshot,
@@ -1458,7 +1442,7 @@ class Catalog:
         parts = []
         for gv, fs in sorted(groups.items()):
             reader = self.spark.read
-            file_schema = self._schema_at(snap, gv)
+            file_schema = snap.schema_at(gv)
             if file_schema is not None:
                 reader = reader.schema(file_schema.to_struct_type())
             df = reader.parquet(
@@ -1728,8 +1712,11 @@ class Catalog:
         commit_properties: dict[str, str] | None = None,
     ) -> None:
         """Transactional multi-mode write (reference
-        `catalog/main/impl.py:226-650`). Retries the whole program on
-        non-commuting commit conflicts (optimistic MVCC).
+        `catalog/main/impl.py:226-650`): creates the table under AUTO or
+        CREATE when it does not exist, then runs `_write_once` (resolve,
+        plan, write, commit) through `_retry_on_conflict`. A commit that
+        loses its slot and cannot rebase reruns `_write_once` from a
+        fresh snapshot (optimistic MVCC).
 
         ``commit_properties``: table properties stamped ON THE SAME
         COMMIT as the data (atomic watermark channel — e.g. incremental
@@ -1774,6 +1761,21 @@ class Catalog:
         commit_properties: dict[str, str] | None = None,
         snap: Snapshot | None = None,
     ) -> None:
+        """One attempt of `write_to_table`: resolve, plan, write, commit.
+
+        1. Resolve the payload against `snap`: schema evolution,
+           generated columns, AUTO dispatch, mode checks and CHECK
+           constraints.
+        2. Plan — the only mode-specific step: the DataFrame to write,
+           the files the commit removes, and the commit fields that
+           differ between modes, held in one `Commit`.
+        3. Write the planned DataFrame in the table layout (plus the CDC
+           sidecar of a CoW rewrite when `cdc.enabled`).
+        4. Commit once, under `_cow_rebase_rule` for a copy-on-write
+           MERGE/DELETE and the default rule otherwise.
+
+        A lost slot that cannot rebase raises `CommitConflictError`, and
+        `write_to_table` runs this again from a fresh snapshot."""
         if snap is None:
             snap = self.snapshot(table, namespace)
         if any(f.content_type for f in snap.files):
@@ -1813,23 +1815,6 @@ class Catalog:
                 )
         if mode in (TableWriteMode.MERGE, TableWriteMode.DELETE) and not merge_keys:
             raise SchemaError(f"{mode} requires at least one merge key")
-
-        part_scheme = (
-            [PartitionKey.from_dict(d) for d in snap.partition_scheme]
-            if snap.partition_scheme
-            else None
-        )
-        srt_scheme = (
-            [SortKey.from_dict(d) for d in snap.sort_scheme]
-            if snap.sort_scheme
-            else None
-        )
-        max_rpf = int(props.get("max_records_per_file", DEFAULT_MAX_RECORDS_PER_FILE))
-        troot = self._table_root(table, namespace)
-        log = self._log(table, namespace)
-
-        salt = props.get("write.partition_salt")
-        bloom_cols = _bloom_columns(props)
         # CHECK constraints (Delta-style, `constraint.<name>` props):
         # enforced on the incoming payload before any file is written —
         # zero cost when none are declared. DELETE payloads are filters,
@@ -1837,243 +1822,207 @@ class Catalog:
         if mode != TableWriteMode.DELETE:
             self._enforce_constraints(df, props, table, namespace)
 
-        def _write(data: DataFrame) -> list[dict]:
-            return write_data_files(
-                data,
-                troot,
-                part_scheme,
-                srt_scheme,
-                max_rpf,
-                partition_salt=int(salt) if salt else None,
-                fs=self.fs,
-                bloom_columns=bloom_cols,
-            )
-
-        def _cdc_actions(change_df: DataFrame) -> list[dict]:
-            """Row-level change sidecars for CoW commits (property
-            `cdc.enabled`) — make `read_changes` exact for CoW tables."""
-            if not props.get("cdc.enabled"):
-                return []
-            return [
-                {"cdc": a["add"]}
-                for a in write_data_files(change_df, troot, fs=self.fs)
-            ]
-
-        schema_json = schema.to_json() if schema_changed else None
-
-        if mode in (TableWriteMode.APPEND, TableWriteMode.ADD):
-            batch = schema.validate_and_coerce(df)
-            adds = _write(batch)
-            commit = Commit(
-                version=snap.version + 1,
-                operation=mode.upper(),
-                delta_type=DeltaType.APPEND if mode == "append" else DeltaType.ADD,
-                schema_json=schema_json,
-                properties=commit_properties,
-                actions=adds,
-            )
-            log.commit(commit)
-            self._maybe_autocompact(table, namespace, props)
-            return
-
-        if mode == TableWriteMode.CHRONO:
-            et = schema.event_time_field
-            if not et:
-                raise SchemaError("CHRONO requires an event_time field")
-            batch = schema.validate_and_coerce(df)
-            et_type = schema.field(et).data_type.typeName()
-            if et_type in ("long", "integer"):
-                # Event time already numeric (e.g. epoch micros).
-                pos_expr = F.max(F.col(et))
-            else:
-                # Wall-clock NTZ micros — TZ-independent on both write
-                # and read sides.
-                pos_expr = F.max(
-                    F.unix_micros(
-                        F.to_utc_timestamp(F.col(et).cast("timestamp_ntz"), "UTC")
-                    )
-                )
-            pos_row = batch.agg(pos_expr.alias("m")).collect()[0]
-            pos = int(pos_row["m"]) if pos_row["m"] is not None else None
-            adds = _write(batch)
-            commit = Commit(
-                version=snap.version + 1,
-                operation="CHRONO",
-                properties=commit_properties,
-                delta_type=DeltaType.CHRONO,
-                stream_position=pos,
-                watermark=pos,
-                schema_json=schema_json,
-                actions=adds,
-            )
-            log.commit(commit)
-            return
-
-        if mode == TableWriteMode.REPLACE:
-            batch = schema.validate_and_coerce(df)
-            adds = _write(batch)
-            commit = Commit(
-                version=snap.version + 1,
-                operation="REPLACE",
-                properties=commit_properties,
-                delta_type=DeltaType.APPEND,
-                schema_json=schema_json,
-                actions=adds + [{"remove": {"path": f.path}} for f in snap.files],
-            )
-            log.commit(commit)
-            return
-
-        # MERGE / DELETE
+        # Plan: `plan.actions` holds the removes until the write is done.
+        plan = Commit(
+            version=snap.version + 1,
+            operation=mode.upper(),
+            properties=commit_properties,
+            schema_json=schema.to_json() if schema_changed else None,
+        )
+        payload_cols = cdc = bounds_fn = pinned = None
+        autocompact = False
         cow = props.get("read_optimization", "max") == "max"
+        try:
+            if mode in (TableWriteMode.APPEND, TableWriteMode.ADD):
+                data = schema.validate_and_coerce(df)
+                plan.delta_type = (
+                    DeltaType.APPEND if mode == "append" else DeltaType.ADD
+                )
+                autocompact = True
+            elif mode == TableWriteMode.CHRONO:
+                et = schema.event_time_field
+                if not et:
+                    raise SchemaError("CHRONO requires an event_time field")
+                data = schema.validate_and_coerce(df)
+                plan.delta_type = DeltaType.CHRONO
+                plan.stream_position = plan.watermark = self._max_event_time(
+                    data, schema.field(et)
+                )
+            elif mode == TableWriteMode.REPLACE:
+                data = schema.validate_and_coerce(df)
+                plan.delta_type = DeltaType.APPEND
+                plan.actions = [{"remove": {"path": f.path}} for f in snap.files]
+            elif mode == TableWriteMode.DELETE:
+                keys = [c for c in df.columns if c in schema.names]
+                if not keys:
+                    # An empty condition list would plan as a cross
+                    # anti-join and silently delete every row.
+                    raise SchemaError(
+                        f"DELETE payload columns {df.columns} share no columns "
+                        f"with the table schema {schema.names}"
+                    )
+                if cow:
+                    data, plan.actions, bounds_fn = self._plan_cow(
+                        snap,
+                        schema,
+                        df,
+                        keys,
+                        lambda current: equality_delete(current, df, keys),
+                    )
+                    cdc = df
+                else:
+                    # Condition columns for the MoR resolver (an equality
+                    # delete may key on NON-merge-key columns).
+                    data, payload_cols = df.select(*keys), sorted(keys)
+                    plan.delta_type = DeltaType.DELETE
+            else:  # MERGE
+                batch = self._normalize_merge_batch(df, schema)
+                if cow:
+                    # The payload plan evaluates ≥3× on the CoW path
+                    # (bounds aggregate, then twice inside the upsert
+                    # plan: anti-join keys + union) and may embed an
+                    # arbitrary upstream pipeline. Cache once, unpersist
+                    # after commit — MEMORY_AND_DESERIALIZED spills to
+                    # disk, so a cluster-scale payload degrades gracefully
+                    # instead of re-running its lineage per evaluation.
+                    batch = pinned = batch.persist()
+                    # Partial when the batch lacks some existing non-key
+                    # column — those fill from the matched old row.
+                    partial = snap.schema is not None and bool(
+                        set(snap.schema.names) - set(df.columns)
+                    )
+                    data, plan.actions, bounds_fn = self._plan_cow(
+                        snap,
+                        schema,
+                        batch,
+                        merge_keys,
+                        lambda current: self._cow_upsert(
+                            current, batch, schema, partial
+                        ),
+                    )
+                    cdc = batch
+                else:
+                    data = schema.validate_and_coerce(batch)
+                    plan.delta_type = DeltaType.UPSERT
+                    payload = sorted(c for c in batch.columns if c in schema.names)
+                    if set(payload) != set(schema.names):
+                        # Partial payload: the written file is schema-
+                        # coerced (absent columns null-filled), so the
+                        # resolver needs the original column subset to
+                        # stitch winners.
+                        payload_cols = payload
+
+            # Write. CoW adds are fully resolved data — no delta_type, or
+            # the read path would re-fold them as merge-on-read deltas.
+            troot = self._table_root(table, namespace)
+            adds = write_data_files(
+                data, troot, fs=self.fs, **self._table_layout(snap)
+            )
+            if payload_cols:
+                for a in adds:
+                    a["add"]["payload_cols"] = payload_cols
+            changes = []
+            if cdc is not None and props.get("cdc.enabled"):
+                # Row-level change sidecars make `read_changes` exact for
+                # CoW tables.
+                changes = [
+                    {"cdc": a["add"]}
+                    for a in write_data_files(cdc, troot, fs=self.fs)
+                ]
+
+            # Commit, stamped with the time the data is in place.
+            plan.actions = adds + plan.actions + changes
+            plan.timestamp_ms = int(time.time() * 1000)
+            self._log(table, namespace).commit(
+                plan, self._cow_rebase_rule(plan, bounds_fn) if bounds_fn else None
+            )
+        finally:
+            if pinned is not None:
+                self._unpin(pinned)
+        if autocompact:
+            self._maybe_autocompact(table, namespace, props)
+
+    def _plan_cow(
+        self,
+        snap: Snapshot,
+        schema: Schema,
+        payload: DataFrame,
+        keys: list[str],
+        rewrite,
+    ) -> "tuple[DataFrame, list[dict], Any]":
+        """Copy-on-write MERGE/DELETE plan: `rewrite(current)` over the
+        rows of the files whose key range overlaps `payload`; untouched
+        files stay live by reference (copy-by-reference,
+        `merge.py:463-502`). Touched files are read WITH the positional-
+        delete sidecars so the rewrite doesn't resurrect deleted rows;
+        the sidecars themselves stay live (not removed) to keep covering
+        untouched files.
+
+        Returns the rewritten rows, the remove actions, and the bounds
+        function for `_cow_rebase_rule`: the split's own payload bounds,
+        or a lazy aggregate when the split took none (empty table)."""
+        touched, bounds = self._split_by_key_overlap(snap, payload, keys)
         pos_sidecars = [
             f for f in snap.files if f.delta_type == DeltaType.POSITIONAL_DELETE
         ]
-        if mode == TableWriteMode.DELETE:
-            delete_cols = [c for c in df.columns if c in schema.names]
-            if not delete_cols:
-                # An empty condition list would plan as a cross anti-join
-                # and silently delete every row.
-                raise SchemaError(
-                    f"DELETE payload columns {df.columns} share no columns "
-                    f"with the table schema {schema.names}"
-                )
-            if cow:
-                touched, _untouched = self._split_by_key_overlap(
-                    snap, df, delete_cols
-                )
-                current = self._read_files(
-                    snap, touched + (pos_sidecars if touched else [])
-                )
-                current = schema.read_projection(current)
-                result = equality_delete(current, df, delete_cols)
-                adds = _write(result)
-                # CoW adds are fully resolved data — no delta_type, or the
-                # read path would re-fold them as merge-on-read deltas.
-                # Untouched files stay live by reference.
-                commit = Commit(
-                    version=snap.version + 1,
-                    operation="DELETE",
-                    properties=commit_properties,
-                    schema_json=schema_json,
-                    actions=adds
-                    + [{"remove": {"path": f.path}} for f in touched]
-                    + _cdc_actions(df),
-                )
-            else:
-                adds = _write(df.select(*delete_cols))
-                for a in adds:
-                    # Condition columns for the MoR resolver (an
-                    # equality delete may key on NON-merge-key columns).
-                    a["add"]["payload_cols"] = sorted(delete_cols)
-                commit = Commit(
-                    version=snap.version + 1,
-                    operation="DELETE",
-                    properties=commit_properties,
-                    delta_type=DeltaType.DELETE,
-                    schema_json=schema_json,
-                    actions=adds,
-                )
-            log.commit(
-                commit,
-                self._cow_rebase_rule(
-                    commit, lambda: self._payload_bounds(df, delete_cols)
-                )
-                if cow
-                else None,
-            )
-            return
+        current = self._read_files(snap, touched + (pos_sidecars if touched else []))
+        data = rewrite(schema.read_projection(current))
+        removes = [{"remove": {"path": f.path}} for f in touched]
+        if bounds is None:
+            return data, removes, lambda: self._payload_bounds(payload, keys)
+        return data, removes, lambda: bounds
 
-        # MERGE
-        batch = self._normalize_merge_batch(df, schema)
-        cached_batch = False
-        if cow:
-            # The payload plan evaluates ≥3× on the CoW path (bounds
-            # aggregate for the copy-by-reference split, twice inside
-            # the upsert plan: anti-join keys + union) and may embed an
-            # arbitrary upstream pipeline. Cache once, unpersist after
-            # commit — MEMORY_AND_DESERIALIZED spills to disk, so a
-            # cluster-scale payload degrades gracefully instead of
-            # re-running its lineage per evaluation.
-            batch = batch.persist()
-            cached_batch = True
-            touched, untouched = self._split_by_key_overlap(
-                snap, batch, merge_keys
-            )
-            work_snap_files = touched
-            # Read touched files WITH the positional-delete sidecars so
-            # the rewrite doesn't resurrect deleted rows; the sidecars
-            # themselves stay live (not in the remove list) to keep
-            # covering untouched-by-reference files.
-            current = self._read_files(
-                snap, work_snap_files + (pos_sidecars if work_snap_files else [])
-            )
-            current = schema.read_projection(current)
-            # Partial when the batch lacks some existing non-key column —
-            # those fill from the matched old row (reference
+    @staticmethod
+    def _cow_upsert(
+        current: DataFrame, batch: DataFrame, schema: Schema, partial: bool
+    ) -> DataFrame:
+        """The rows a CoW MERGE writes for its touched files."""
+        keys = schema.merge_keys
+        if partial:
+            # Absent columns fill from the matched old row (reference
             # `_merge_records_partially`, `steps/merge.py:256-308`).
-            partial = bool(
-                set(snap.schema.names) - set(df.columns)
-            ) if snap.schema else False
-            if partial:
-                result = partial_upsert(current, batch, merge_keys)
-                result = schema.read_projection(result)
-            elif schema.merge_order_specs():
-                # Merge order (or event time) picks the winner — an
-                # incoming row only replaces when it wins the ordering
-                # (reference `schema.py:1018-1046`; precedence over
-                # arrival order, `test_default_catalog_impl.py:4643`).
-                coerced = schema.validate_and_coerce(batch)
-                unioned = current.withColumn("__dcs_src", F.lit(0)).unionByName(
-                    coerced.withColumn("__dcs_src", F.lit(1))
-                )
-                order = schema.merge_order_columns() + [F.desc("__dcs_src")]
-                result = dedupe_last_writer(unioned, merge_keys, order).drop(
-                    "__dcs_src"
-                )
-            else:
-                result = upsert(current, schema.validate_and_coerce(batch), merge_keys)
-            adds = _write(result)
-            # CoW adds are resolved data — see DELETE note above. Only
-            # touched files are removed; untouched files stay live by
-            # reference (copy-by-reference, `merge.py:463-502`).
-            commit = Commit(
-                version=snap.version + 1,
-                operation="MERGE",
-                properties=commit_properties,
-                schema_json=schema_json,
-                actions=adds
-                + [{"remove": {"path": f.path}} for f in work_snap_files]
-                + _cdc_actions(batch),
-            )
-        else:
-            adds = _write(schema.validate_and_coerce(batch))
-            payload = sorted(c for c in batch.columns if c in schema.names)
-            if set(payload) != set(schema.names):
-                for a in adds:
-                    # Partial payload: the written file is schema-coerced
-                    # (absent columns null-filled), so the resolver needs
-                    # the original column subset to stitch winners.
-                    a["add"]["payload_cols"] = payload
-            commit = Commit(
-                version=snap.version + 1,
-                operation="MERGE",
-                properties=commit_properties,
-                delta_type=DeltaType.UPSERT,
-                schema_json=schema_json,
-                actions=adds,
-            )
-        try:
-            log.commit(
-                commit,
-                self._cow_rebase_rule(
-                    commit, lambda: self._payload_bounds(batch, merge_keys)
-                )
-                if cow
-                else None,
-            )
-        finally:
-            if cached_batch:
-                self._unpin(batch)
+            return schema.read_projection(partial_upsert(current, batch, keys))
+        coerced = schema.validate_and_coerce(batch)
+        if not schema.merge_order_specs():
+            return upsert(current, coerced, keys)
+        # Merge order (or event time) picks the winner — an incoming row
+        # only replaces when it wins the ordering (reference
+        # `schema.py:1018-1046`; precedence over arrival order,
+        # `test_default_catalog_impl.py:4643`).
+        unioned = current.withColumn("__dcs_src", F.lit(0)).unionByName(
+            coerced.withColumn("__dcs_src", F.lit(1))
+        )
+        order = schema.merge_order_columns() + [F.desc("__dcs_src")]
+        return dedupe_last_writer(unioned, keys, order).drop("__dcs_src")
+
+    @staticmethod
+    def _max_event_time(batch: DataFrame, field: Field) -> "int | None":
+        """CHRONO stream position: the batch's largest event time — the
+        value itself when numeric (e.g. epoch micros), else wall-clock
+        NTZ micros (TZ-independent on both write and read sides)."""
+        et = F.col(field.name)
+        if field.data_type.typeName() not in ("long", "integer"):
+            et = F.unix_micros(F.to_utc_timestamp(et.cast("timestamp_ntz"), "UTC"))
+        m = batch.agg(F.max(et).alias("m")).collect()[0]["m"]
+        return int(m) if m is not None else None
+
+    @staticmethod
+    def _table_layout(snap: Snapshot) -> dict:
+        """`write_data_files` keyword arguments for the table's layout:
+        partition and sort scheme, file size, partition salt and bloom
+        columns."""
+        props = {**DEFAULT_PROPERTIES, **snap.properties}
+        salt = props.get("write.partition_salt")
+        ps, ss = snap.partition_scheme, snap.sort_scheme
+        return dict(
+            partition_scheme=[PartitionKey.from_dict(d) for d in ps] if ps else None,
+            sort_scheme=[SortKey.from_dict(d) for d in ss] if ss else None,
+            max_records_per_file=int(
+                props.get("max_records_per_file", DEFAULT_MAX_RECORDS_PER_FILE)
+            ),
+            partition_salt=int(salt) if salt else None,
+            bloom_columns=_bloom_columns(props),
+        )
 
     @staticmethod
     def _table_constraints(props: dict) -> "dict[str, str]":
@@ -2272,7 +2221,7 @@ class Catalog:
         snap: Snapshot,
         payload: DataFrame,
         cols: list[str],
-    ) -> tuple[list[FileEntry], list[FileEntry]]:
+    ) -> "tuple[list[FileEntry], dict | None]":
         """Copy-by-reference planning (reference `merge.py:408-502`:
         untouched hash buckets reuse previous files without rewrite).
 
@@ -2282,9 +2231,11 @@ class Catalog:
         column (a row matching on every key would have to fall inside
         every per-column range). Conservative: files without usable
         stats, or non-comparable stat types, count as touched.
-        """
-        import datetime
 
+        Returns the touched files and the payload bounds
+        (`_payload_bounds`), or None for the bounds when the table holds
+        no file to split and none were computed.
+        """
         # Positional-delete sidecars are neither touched nor untouched —
         # they carry no merge-key stats (so they'd always classify as
         # "touched" and get removed by the rewrite commit, resurrecting
@@ -2295,17 +2246,9 @@ class Catalog:
             f for f in snap.files if f.delta_type != DeltaType.POSITIONAL_DELETE
         ]
         if not files or not cols:
-            return files, []
+            return files, None
         bounds = self._payload_bounds(payload, cols)
-        if not bounds:
-            return files, []
-        touched, untouched = [], []
-        for f in files:
-            if self._stats_overlap(f.stats, bounds):
-                touched.append(f)
-            else:
-                untouched.append(f)
-        return touched, untouched
+        return [f for f in files if self._stats_overlap(f.stats, bounds)], bounds
 
     @staticmethod
     def _payload_bounds(payload: DataFrame, cols: list[str]) -> dict:
@@ -2383,8 +2326,10 @@ class Catalog:
         On a resolved CoW table one key lives in one file, so any
         cross-writer key interaction implies one of those observable
         overlaps (missing stats count as overlap and force the
-        recompute). `bounds_fn` runs the payload-bounds aggregate lazily:
-        only when a conflict needs it, never on the happy path."""
+        recompute). `bounds_fn` returns the payload bounds; it is called
+        at most once, and only when a conflict needs them. `_plan_cow`
+        passes the bounds its key-overlap split already computed, so a
+        lost slot reruns no Spark job."""
         default = default_rebase_rule(commit)
         bounds = None
 
@@ -5231,25 +5176,15 @@ class Catalog:
         resolved = self._read_files(snap, rewrite)
         if snap.schema is not None:
             resolved = snap.schema.read_projection(resolved)
-        props = {**DEFAULT_PROPERTIES, **snap.properties}
-        max_rpf = int(
-            props.get("max_records_per_file", DEFAULT_MAX_RECORDS_PER_FILE)
-        )
+        # No `write.partition_salt`: salting spreads one partition over
+        # many writer tasks, and so over many files — what OPTIMIZE undoes.
+        layout = {**self._table_layout(snap), "partition_salt": None}
+        max_rpf = layout["max_records_per_file"]
         if mode.endswith("incremental"):
             # Bin-pack: N small input splits must not become N small
             # output files — coalesce (no shuffle) to the target count.
             total = sum(f.records or 0 for f in rewrite)
             resolved = resolved.coalesce(max(1, -(-total // max_rpf)))
-        part_scheme = (
-            [PartitionKey.from_dict(d) for d in snap.partition_scheme]
-            if snap.partition_scheme
-            else None
-        )
-        srt = (
-            [SortKey.from_dict(d) for d in snap.sort_scheme]
-            if snap.sort_scheme
-            else None
-        )
         if zorder_by:
             mode = "partition-zorder" if mode == "partition" else "zorder"
             from deltacat_spark.plans.transforms import zorder_column
@@ -5265,15 +5200,9 @@ class Catalog:
                 .drop(zname)
             )
             # The z-layout IS the sort; a linear sort scheme would undo it.
-            srt = None
+            layout["sort_scheme"] = None
         adds = write_data_files(
-            resolved,
-            self._table_root(table, namespace),
-            part_scheme,
-            srt,
-            max_rpf,
-            fs=self.fs,
-            bloom_columns=_bloom_columns(props),
+            resolved, self._table_root(table, namespace), fs=self.fs, **layout
         )
         commit = Commit(
             version=snap.version + 1,
@@ -5324,15 +5253,17 @@ class Catalog:
         if snap.schema is not None:
             resolved = snap.schema.read_projection(resolved)
         arranged = resolved.repartitionByRange(num_partitions, F.col(column))
-        props = {**DEFAULT_PROPERTIES, **snap.properties}
+        # The range layout replaces the table's partition and sort scheme.
         adds = write_data_files(
             arranged,
             self._table_root(table, namespace),
-            None,
-            None,
-            int(props.get("max_records_per_file", DEFAULT_MAX_RECORDS_PER_FILE)),
             fs=self.fs,
-            bloom_columns=_bloom_columns(props),
+            **{
+                **self._table_layout(snap),
+                "partition_scheme": None,
+                "sort_scheme": None,
+                "partition_salt": None,
+            },
         )
         self._log(table, namespace).commit(
             Commit(

@@ -155,6 +155,49 @@ def test_cow_rebase_lists_and_reads_the_log_once(spark, tmp_path, monkeypatch):
     assert _rows(cat) == [(1, 0), (2, 7), (3, 0), (4, 0), (200, 0)]
 
 
+@pytest.mark.parametrize("mode", ["merge", "delete"])
+def test_lost_cow_slot_reuses_split_bounds(spark, tmp_path, monkeypatch, mode):
+    """A CoW MERGE/DELETE that loses its slot to a key-disjoint MERGE
+    rebases without running the payload-bounds aggregate again."""
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    cat.create_table("t", schema=KEYED)
+    cat.write_to_table(
+        spark.createDataFrame([(i, 0) for i in range(1, 5)], "id long, v int"),
+        "t",
+        mode="merge",
+    )
+    stale = cat.snapshot("t")
+    cat.write_to_table(
+        spark.createDataFrame([(200, 0)], "id long, v int"), "t", mode="merge"
+    )
+    winner = cat.snapshot("t").version
+
+    calls = []
+    orig = Catalog._payload_bounds
+
+    def counted(payload, cols):
+        calls.append(tuple(cols))
+        return orig(payload, cols)
+
+    monkeypatch.setattr(Catalog, "_payload_bounds", staticmethod(counted))
+    state = _serve_stale_once(monkeypatch, stale)
+    if mode == "merge":
+        payload = spark.createDataFrame([(2, 7)], "id long, v int")
+        expected = [(1, 0), (2, 7), (3, 0), (4, 0), (200, 0)]
+    else:
+        payload = spark.createDataFrame([(2,)], "id long")
+        expected = [(1, 0), (3, 0), (4, 0), (200, 0)]
+    cat.write_to_table(payload, "t", mode=mode)
+    monkeypatch.undo()
+
+    assert state["served"]
+    assert calls == [("id",)]
+    snap = cat.snapshot("t")
+    assert snap.version == winner + 1  # rebased, not recomputed
+    assert snap.commits[-1].removes
+    assert _rows(cat) == expected
+
+
 def test_rebase_skips_aborted_transaction_slot(spark, tmp_path):
     """A slot held by an aborted catalog transaction is invisible: the
     rebase rule is never asked about it."""
