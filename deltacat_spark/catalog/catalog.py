@@ -25,9 +25,11 @@ import time
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from deltacat_spark.localdf import local_df
 
+from deltacat_spark.catalog.filescan import scan_files
 from deltacat_spark.catalog.io import (
     DEFAULT_MAX_RECORDS_PER_FILE,
     write_data_files,
@@ -438,15 +440,16 @@ def _readd(f: FileEntry, src_root: "str | None" = None) -> dict:
     (RESTORE, CLONE): its path and footer metadata; the new commit gives
     it its log position.
 
-    CLONE passes `src_root`: the path becomes absolute, which
-    `FileEntry.abs_path` passes through untouched (posix join), so every
-    read path resolves it without special-casing clones. `bloom_ref` is
-    dropped there: it is relative to the source root, and the clone
-    would resolve it under its own."""
+    CLONE passes `src_root`: the path and `bloom_ref` become absolute,
+    which `FileEntry.abs_path` and the bloom probe pass through
+    untouched (posix join), so every read path resolves them without
+    special-casing clones. The source's vacuum deletes a sidecar only
+    with its data file, which the clone registration pins."""
     add = {k: v for k, v in f.to_dict().items() if k in _READD_KEYS}
     if src_root is not None:
-        add.pop("bloom_ref", None)
         add["path"] = f.abs_path(src_root)
+        if f.bloom_ref:
+            add["bloom_ref"] = os.path.join(src_root, f.bloom_ref)
     return {"add": add}
 
 
@@ -458,6 +461,12 @@ _DATA_DELTAS = {DeltaType.APPEND, DeltaType.ADD, DeltaType.CHRONO, DeltaType.UPS
 # construction (gates on commit-log record counts, not cluster size).
 _MOR_SPLIT_MIN_RATIO = 4
 _MOR_SPLIT_MAX_DELTA_RECORDS = 2_000_000
+
+# A positional-delete sidecar (`delete_where`): the data file's
+# basename and the deleted row's index in it.
+_POS_DELETE_SCHEMA = StructType(
+    [StructField("_file", StringType()), StructField("_pos", LongType())]
+)
 
 
 class TableNotFoundError(FileNotFoundError):
@@ -1119,9 +1128,11 @@ class Catalog:
         """Snapshot read (reference `read_table`,
         `catalog/main/impl.py:1638-1722`).
 
-        Driver-side: log replay + stats/partition file pruning. Executor
-        side: one `spark.read.parquet(live_files)` (per schema
-        generation), merge-on-read fold only if unresolved deltas exist.
+        Driver-side: log replay + stats/partition file pruning; the
+        scan's file index is built from the surviving log entries, so
+        planning lists and stats nothing. Executor side: one parquet
+        scan per schema generation, merge-on-read fold only if
+        unresolved deltas exist.
 
         `read_as`: 'spark' (distributed DataFrame — the default and the
         only scale-safe choice), or a driver-collected local variant
@@ -1274,15 +1285,18 @@ class Catalog:
         (reference converter, `compute/converter/steps/convert.py`)."""
         if not pos_files:
             return df
-        dels = self.spark.read.parquet(
-            *[self.fs.spark_path(f.abs_path(snap.table_root)) for f in pos_files]
-        ).select("_file", "_pos").distinct()
+        dels = self._pos_deletes(snap.table_root, pos_files)
         out = df.join(
             self._hint_small(snap, dels, pos_files),
             (df["__dcs_file"] == dels["_file"]) & (df["__dcs_pos"] == dels["_pos"]),
             "left_anti",
         )
         return out.drop("__dcs_file", "__dcs_pos")
+
+    def _pos_deletes(self, table_root: str, files: list[FileEntry]) -> DataFrame:
+        """The (`_file`, `_pos`) tuples of positional-delete sidecars.
+        Duplicates are kept: every consumer is an anti- or semi-join."""
+        return scan_files(self.spark, self.fs, table_root, files, _POS_DELETE_SCHEMA)
 
     def _manifest_df(self, snap: Snapshot, files: list[FileEntry]) -> DataFrame:
         rows = [
@@ -1423,8 +1437,9 @@ class Catalog:
         `catalog/main/impl.py:1563-1635`).
 
         Files are grouped by the schema generation they were written
-        under; each group is one `spark.read.parquet(paths)` (so Spark
-        parallelizes per file), then groups union by name.
+        under; each group is one parquet scan planned from the log
+        (`filescan.scan_files`: no listing, no per-file stat), then
+        groups union by name.
         """
         target = snap.schema
         schema_versions = sorted({v for v, _ in snap.schema_history})
@@ -1440,14 +1455,13 @@ class Catalog:
         for f in files:
             groups.setdefault(gen(f.version), []).append(f)
         parts = []
+        structs = []
         for gv, fs in sorted(groups.items()):
-            reader = self.spark.read
             file_schema = snap.schema_at(gv)
-            if file_schema is not None:
-                reader = reader.schema(file_schema.to_struct_type())
-            df = reader.parquet(
-                *[self.fs.spark_path(f.abs_path(snap.table_root)) for f in fs]
+            structs.append(
+                file_schema.to_struct_type() if file_schema is not None else None
             )
+            df = scan_files(self.spark, self.fs, snap.table_root, fs, structs[-1])
             if file_path_column:
                 df = df.withColumn(file_path_column, F.input_file_name())
             if with_pos:
@@ -1508,24 +1522,27 @@ class Catalog:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
-        if target is not None:
-            extras = [
-                c
-                for c in out.columns
-                if c.startswith("__dcs_") or c == file_path_column
-            ]
-            out = out.select(
-                *[
-                    (
-                        F.col(f.name).cast(f.data_type).alias(f.name)
-                        if f.name in out.columns
-                        else F.lit(f.past_default).cast(f.data_type).alias(f.name)
-                    )
-                    for f in target.fields
-                ],
-                *[F.col(e) for e in extras],
-            )
-        return out
+        if target is None or structs == [target.to_struct_type()]:
+            # One generation, the snapshot's own: the scan already yields
+            # the target columns, in order and of the target types. The
+            # projection would change nothing and costs ~25 Py4J round
+            # trips per column.
+            return out
+        present = out.columns
+        extras = [
+            c for c in present if c.startswith("__dcs_") or c == file_path_column
+        ]
+        return out.select(
+            *[
+                (
+                    F.col(f.name).cast(f.data_type).alias(f.name)
+                    if f.name in present
+                    else F.lit(f.past_default).cast(f.data_type).alias(f.name)
+                )
+                for f in target.fields
+            ],
+            *[F.col(e) for e in extras],
+        )
 
     def _resolve_mor(
         self,
@@ -2388,12 +2405,7 @@ class Catalog:
             f for f in snap.files if f.delta_type == DeltaType.POSITIONAL_DELETE
         ]
         if pos_existing:
-            dels = self.spark.read.parquet(
-                *[
-                    self.fs.spark_path(f.abs_path(snap.table_root))
-                    for f in pos_existing
-                ]
-            ).select("_file", "_pos")
+            dels = self._pos_deletes(snap.table_root, pos_existing)
             rows = rows.join(
                 self._hint_small(snap, dels, pos_existing),
                 (rows["__dcs_file"] == dels["_file"])
@@ -4823,14 +4835,10 @@ class Catalog:
                 if not prev_data:
                     continue
                 rows = self._scan(snap, prev_data, with_pos=True)
-                dels = self.spark.read.parquet(
-                    *[
-                        self.fs.spark_path(
-                            self.fs.join(snap.table_root, a["path"])
-                        )
-                        for a in c.adds
-                    ]
-                ).select("_file", "_pos").distinct()
+                dels = self._pos_deletes(
+                    snap.table_root,
+                    [FileEntry(path=a["path"], bytes=a.get("bytes")) for a in c.adds],
+                )
                 deleted = (
                     rows.join(
                         dels,

@@ -37,7 +37,9 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, types as T
 
+from deltacat_spark.catalog.filescan import scan_files
 from deltacat_spark.storage.fs import LOCAL_FS
+from deltacat_spark.storage.snapshot import FileEntry
 from deltacat_spark.plans.transforms import (
     PART_PREFIX,
     PartitionKey,
@@ -102,9 +104,20 @@ def write_data_files(
         from deltacat_spark.storage.bloom import attach_blooms, eligible_columns
 
         cols = eligible_columns(df, [c for c in bloom_columns if c in names])
-        if cols:
+        if cols and adds:
             try:
-                attach_blooms(adds, table_root, cols, df.sparkSession, fs)
+                files = [
+                    FileEntry(path=a["add"]["path"], bytes=a["add"].get("bytes"))
+                    for a in adds
+                ]
+                raw = scan_files(
+                    df.sparkSession,
+                    fs,
+                    table_root,
+                    files,
+                    T.StructType([df.schema[c] for c in cols]),
+                )
+                attach_blooms(adds, table_root, raw, fs)
             except Exception as e:  # pragma: no cover - exercised via test
                 # Blooms are a read optimization, never a durability
                 # dependency: a failed bloom pass must not fail the

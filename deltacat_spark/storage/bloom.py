@@ -163,16 +163,18 @@ def eligible_columns(df: DataFrame, requested: list[str]) -> list[str]:
 def attach_blooms(
     adds: list[dict],
     table_root: str,
-    cols: list[str],
-    spark,
+    raw: DataFrame,
     fs,
 ) -> None:
     """Compute blooms for a commit's data files and write sidecars.
 
     Mutates each add action in place with ``bloom_ref``. ``adds`` are
     the post-rename actions from ``collect_add_actions`` (paths relative
-    to the table root, ``records`` known from the footer pass).
+    to the table root, ``records`` known from the footer pass); ``raw``
+    scans exactly their files, projected to the bloom columns.
     """
+    spark = raw.sparkSession
+    cols = raw.columns
     entries = [
         (a["add"]["path"], int(a["add"].get("records") or 0))
         for a in adds
@@ -186,8 +188,6 @@ def attach_blooms(
         base = rel.rsplit("/", 1)[-1]
         m_by_base[base] = bloom_m(records)
         rel_by_base[base] = rel
-    paths = [fs.spark_path(fs.join(table_root, rel)) for rel, _ in entries]
-    raw = spark.read.parquet(*paths)
     # Record each column's type KIND so the read-side probe can
     # normalize predicate literals to the same canonical string the
     # cast("string") below produced ("int" vs "str" — see

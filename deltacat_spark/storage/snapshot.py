@@ -346,8 +346,10 @@ class Snapshot:
             try:
                 import json as _json
 
+                # os.path.join, as `FileEntry.abs_path`: a shallow
+                # clone's ref is absolute and must pass through.
                 sidecar = _json.loads(
-                    fs.read_text(fs.join(self.table_root, f.bloom_ref))
+                    fs.read_text(os.path.join(self.table_root, f.bloom_ref))
                 )
             except Exception:
                 sidecar = {}  # degrade to "no skipping"
