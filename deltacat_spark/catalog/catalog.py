@@ -38,6 +38,7 @@ from deltacat_spark.operators.merge import (
     dedupe_last_writer,
     equality_delete,
     partial_upsert,
+    sql_ident,
     upsert,
 )
 from deltacat_spark.plans.expr import Expr
@@ -1522,11 +1523,11 @@ class Catalog:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
-        if target is None or structs == [target.to_struct_type()]:
-            # One generation, the snapshot's own: the scan already yields
-            # the target columns, in order and of the target types. The
-            # projection would change nothing and costs ~25 Py4J round
-            # trips per column.
+        if target is None or all(
+            s is not None and target.is_identity(s) for s in structs
+        ):
+            # Every generation has the target's columns, in order and of
+            # the target types: the projection would change nothing.
             return out
         present = out.columns
         extras = [
@@ -2282,13 +2283,12 @@ class Catalog:
         import datetime
 
         bounds: dict[str, tuple] = {}
-        agg_row = payload.agg(
-            *[F.min(F.col(c)).alias(f"lo_{i}") for i, c in enumerate(cols)],
-            *[F.max(F.col(c)).alias(f"hi_{i}") for i, c in enumerate(cols)],
-            *[
-                F.max(F.col(c).isNull().cast("int")).alias(f"nn_{i}")
-                for i, c in enumerate(cols)
-            ],
+        # SQL text: one parse instead of a Py4J round trip per Column call.
+        names = [sql_ident(c) for c in cols]
+        agg_row = payload.selectExpr(
+            *[f"min({c}) AS lo_{i}" for i, c in enumerate(names)],
+            *[f"max({c}) AS hi_{i}" for i, c in enumerate(names)],
+            *[f"max(CAST({c} IS NULL AS INT)) AS nn_{i}" for i, c in enumerate(names)],
         ).collect()[0]
         for i, c in enumerate(cols):
             lo, hi = agg_row[f"lo_{i}"], agg_row[f"hi_{i}"]
@@ -2367,12 +2367,29 @@ class Catalog:
     def _normalize_merge_batch(self, df: DataFrame, schema: Schema) -> DataFrame:
         """Dedupe the incoming batch per merge key (last row wins within
         a batch unless merge order says otherwise — reference dedupes the
-        incremental batch before merging, `compactor_v2/utils/dedupe.py`)."""
-        keys = schema.merge_keys
-        order = schema.merge_order_columns(available=df.columns)
-        df = df.withColumn("__dcs_row", F.monotonically_increasing_id())
-        order = order + [F.desc("__dcs_row")]
-        return dedupe_last_writer(df, keys, order).drop("__dcs_row")
+        incremental batch before merging, `compactor_v2/utils/dedupe.py`).
+
+        `dedupe_last_writer`'s plan, with the window as SQL text: one
+        parse instead of a Py4J round trip per Column call."""
+        order = [
+            f"{sql_ident(name)} {'DESC' if order == 'desc' else 'ASC'} "
+            f"NULLS {'LAST' if nulls == 'last' else 'FIRST'}"
+            for name, order, nulls in schema.merge_order_specs()
+            if name in df.columns
+        ]
+        rank = (
+            "row_number() OVER (PARTITION BY "
+            + ", ".join(map(sql_ident, schema.merge_keys))
+            + " ORDER BY "
+            + ", ".join(order + ["__dcs_row DESC"])
+            + ")"
+        )
+        return (
+            df.withColumn("__dcs_row", F.monotonically_increasing_id())
+            .withColumn("__dcs_rn", F.expr(rank))
+            .filter("__dcs_rn = 1")
+            .drop("__dcs_row", "__dcs_rn")
+        )
 
     @_retried(10)
     def delete_where(

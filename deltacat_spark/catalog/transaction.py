@@ -43,12 +43,14 @@ from pyspark.sql import DataFrame, types as T
 
 from pyspark.sql import functions as F
 
+from deltacat_spark.catalog.filescan import scan_files
 from deltacat_spark.operators.merge import (
     equality_delete,
     partial_upsert,
     upsert,
 )
 from deltacat_spark.storage.commit import TxnMarkers
+from deltacat_spark.storage.snapshot import FileEntry
 
 
 @dataclass
@@ -357,9 +359,18 @@ class Transaction:
         txn._pins = {(ns, t): v for ns, t, v in m["pins"]}
         for om in m["ops"]:
             schema = T.StructType.fromJson(json.loads(om["schema"]))
+            # Listed through the fs seam and read by literal path:
+            # `spark.read.parquet` would glob a root such as `wh[1]`.
+            odir = fs.join(pdir, om["path"])
+            parts = [
+                FileEntry(path=name)
+                for name in sorted(fs.list_dir(odir))
+                if name.endswith(".parquet") and name[0] not in "._"
+            ]
             df = (
-                catalog.spark.read.schema(schema)
-                .parquet(fs.spark_path(fs.join(pdir, om["path"])))
+                scan_files(catalog.spark, fs, odir, parts, schema)
+                if parts
+                else catalog.spark.createDataFrame([], schema)
             )
             txn.ops.append(
                 _Op(df, om["table"], om["namespace"], om["mode"], dict(om["kwargs"]))

@@ -20,6 +20,11 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 
+def sql_ident(name: str) -> str:
+    """`name` as a SQL identifier: backtick-quoted, backticks doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def dedupe_last_writer(
     df: DataFrame,
     keys: Sequence[str],
@@ -105,13 +110,14 @@ def upsert(
     upd_keys = updates.select(*keys).distinct().alias("__dcs_u")
     if broadcast_updates:
         upd_keys = F.broadcast(upd_keys)
-    e = existing.alias("__dcs_e")
-    cond = None
-    for k in keys:
-        c = F.col(f"__dcs_e.{k}").eqNullSafe(F.col(f"__dcs_u.{k}"))
-        cond = c if cond is None else cond & c
-    survivors = e.join(upd_keys, cond, "left_anti")
-    return survivors.unionByName(updates.select(*existing.columns))
+    # One parsed condition: every Column call is a Py4J round trip.
+    cond = " AND ".join(
+        f"__dcs_e.{k} <=> __dcs_u.{k}" for k in map(sql_ident, keys)
+    )
+    survivors = existing.alias("__dcs_e").join(upd_keys, F.expr(cond), "left_anti")
+    if updates.columns != existing.columns:
+        updates = updates.select(*existing.columns)
+    return survivors.unionByName(updates)
 
 
 def partial_upsert(

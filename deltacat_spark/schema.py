@@ -244,12 +244,28 @@ class Schema:
     def from_json(cls, s: str) -> "Schema":
         return cls.of(T.StructType.fromJson(json.loads(s)))
 
+    def is_identity(self, struct: T.StructType) -> bool:
+        """True when the columns of `struct` are already this schema's:
+        its names, in order, of equal data types. `validate_and_coerce`
+        and `read_projection` would then only re-select each column or
+        cast it to its own type, so they return their input instead of
+        planning a projection. Nullability is not compared: neither
+        projection changes it. Column metadata is not compared either:
+        a same-type cast drops it from the DataFrame's schema, but over
+        a table scan Spark's optimizer removes the cast and its alias,
+        so a rewrite writes the same files with or without it."""
+        return [(s.name, s.dataType) for s in struct.fields] == [
+            (f.name, f.data_type) for f in self.fields
+        ]
+
     # -- write-side enforcement ---------------------------------------
     def validate_and_coerce(self, df: DataFrame) -> DataFrame:
         """Apply per-field consistency policy (reference
         `schema.py:595-670,1177-1243`): VALIDATE fails on type mismatch,
         COERCE casts, NONE passes through. Missing columns are filled
         with ``future_default`` (or null when nullable)."""
+        if self.is_identity(df.schema):
+            return df
         cols = []
         df_types = {f.name: f.dataType for f in df.schema.fields}
         for f in self.fields:
@@ -300,6 +316,8 @@ class Schema:
         add missing columns as ``past_default`` (reference zero-copy
         evolution, `schema.py:388-396`), cast widened types, order
         columns."""
+        if self.is_identity(df.schema):
+            return df
         cols = []
         present = {f.name for f in df.schema.fields}
         for f in self.fields:

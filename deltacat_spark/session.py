@@ -38,6 +38,14 @@ def build_session(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # PySpark wraps every Column method and `F.col` in a call-site
+        # capture for error messages: an active-session lookup, a conf
+        # read, a JVM class lookup, an origin set and clear, and a failed
+        # IPython import. That was over half of a CoW MERGE's Py4J round
+        # trips. Pass it as `extra_conf` to get the call-site context
+        # back; PySpark reads it once per process, at the first wrapped
+        # call.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     for k, v in (extra_conf or {}).items():

@@ -117,6 +117,24 @@ def test_pause_resume_survives_new_catalog(spark, catalog, tmp_path):
     )
 
 
+def test_pause_resume_under_glob_characters(spark, tmp_path):
+    """The spill is re-read by literal path: a root such as `wh[1]` is a
+    glob pattern to `spark.read.parquet`, which then finds nothing."""
+    from deltacat_spark.catalog import Catalog
+    from deltacat_spark.catalog.transaction import Transaction
+
+    cat = Catalog(spark, str(tmp_path / "wh[1]"))
+    cat.write_to_table(spark.createDataFrame([(1, "a")], "id long, v string"), "p")
+    txn = cat.transaction()
+    txn.write(
+        spark.createDataFrame([(2, "b")], "id long, v string"), "p", mode="append"
+    )
+    txn_id = txn.pause()
+    resumed = Transaction.resume(Catalog(spark, cat.root), txn_id)
+    resumed.seal()
+    assert sorted(map(tuple, cat.read_table("p").collect())) == [(1, "a"), (2, "b")]
+
+
 def test_pause_resume_cross_table_atomic_seal(spark, catalog):
     from deltacat_spark.catalog import Catalog
     from deltacat_spark.catalog.transaction import Transaction
